@@ -3,6 +3,10 @@
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE
 JSON line: {"metric": ..., "value": N, "unit": "sec", "queries": {...}, "sf": ...}.
 
+`python bench.py q_a q_b ...` times just the named queries with the same
+protocol; the payload then has metric "named_queries_seconds", no r1_*
+headline totals, and is not written to bench_out.json.
+
 Each query is forced end-to-end with a noop-format write (full materialization
 on the executors, nothing shipped to Python), after an untimed warmup of the
 session + catalog.
@@ -95,10 +99,15 @@ def materialize(df) -> None:
 
 
 def main() -> None:
+    names = sys.argv[1:] or HEADLINE
+    headline = names is HEADLINE
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in sf_dir else -1.0
     spark = get_spark(app_name="bigdatainfinance1_spark-bench")
     specs = load_all_queries()
+    unknown = sorted(set(names) - set(specs))
+    if unknown:
+        sys.exit(f"bench.py: unknown queries {unknown}")
 
     # untimed warmup: JVM + catalog + one tiny action, then quiesce so any
     # preceding process activity (the driver runs bench right after a
@@ -109,9 +118,9 @@ def main() -> None:
     time.sleep(float(os.environ.get("SPARK_GRAFT_BENCH_SETTLE_SEC", "3")))
 
     runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "5"))
-    samples: dict[str, list[float]] = {name: [] for name in HEADLINE}
+    samples: dict[str, list[float]] = {name: [] for name in names}
     for r in range(runs):
-        for name in HEADLINE:
+        for name in names:
             t0 = time.perf_counter()
             materialize(specs[name].fn(spark, sf_dir))
             samples[name].append(round(time.perf_counter() - t0, 3))
@@ -142,50 +151,50 @@ def main() -> None:
             "iqr": round(quantile(s, 0.75) - quantile(s, 0.25), 3),
         }
     total = round(sum(timings.values()), 3)
-    r1_total = round(sum(timings[n] for n in HEADLINE[:R1_HEADLINE_N]), 3)
     # Contention forensics: host load arrives in WAVES that inflate whole
     # interleaved passes (observed r6/r7: alternate passes 2x slower with
     # zero code change). Per-pass totals make a wave machine-visible, and
     # the min-floor aggregates are the uncontended readings to compare
     # round-over-round when the pass totals disagree by >1.5x.
     pass_totals = [
-        round(sum(samples[n][r] for n in HEADLINE), 3) for r in range(runs)
+        round(sum(samples[n][r] for n in names), 3) for r in range(runs)
     ]
     total_min = round(sum(d["min"] for d in dispersion.values()), 3)
-    r1_total_min = round(
-        sum(dispersion[n]["min"] for n in HEADLINE[:R1_HEADLINE_N]), 3
-    )
-    payload = json.dumps(
-        {
-            "metric": "headline_suite_seconds",
-            "value": total,
-            "unit": "sec",
-            "queries": timings,
-            "samples": samples,
-            "dispersion": dispersion,
-            "runs_per_query": runs,
-            "aggregation": "median",
-            "sf": sf,
-            "n_queries_registered": len(specs),
-            "r1_headline_seconds": r1_total,
-            "pass_totals": pass_totals,
-            "suite_seconds_min_floor": total_min,
-            "r1_headline_seconds_min_floor": r1_total_min,
-            "note": "headline set expanded in round 3 (13 -> 24) and round 4 (-> 29 queries); "
+    result = {
+        "metric": "headline_suite_seconds" if headline else "named_queries_seconds",
+        "value": total,
+        "unit": "sec",
+        "queries": timings,
+        "samples": samples,
+        "dispersion": dispersion,
+        "runs_per_query": runs,
+        "aggregation": "median",
+        "sf": sf,
+        "n_queries_registered": len(specs),
+        "pass_totals": pass_totals,
+        "suite_seconds_min_floor": total_min,
+    }
+    if headline:
+        r1 = HEADLINE[:R1_HEADLINE_N]
+        result.update(
+            r1_headline_seconds=round(sum(timings[n] for n in r1), 3),
+            r1_headline_seconds_min_floor=round(sum(dispersion[n]["min"] for n in r1), 3),
+            note="headline set expanded in round 3 (13 -> 24) and round 4 (-> 29 queries); "
             "compare r1_headline_seconds against the 19.3 s round-1 baseline, "
             "per-query rows in BASELINE.md for the rest; per-query values are "
             "medians over runs_per_query interleaved passes",
-        }
-    )
+        )
+    payload = json.dumps(result)
     # Round-over-round contract hardening (VERDICT r8 task 2): BENCH_r07 was
     # lost to stdout parsing (`parsed: null`) because nothing guaranteed the
     # one JSON line was the LAST stdout line if a JVM message interleaved.
     # (a) persist the identical payload to bench_out.json next to this file,
     # (b) stop the Spark session and flush both streams BEFORE printing, so
     # the JSON is emitted after every JVM stdout writer is gone.
-    Path(__file__).resolve().parent.joinpath("bench_out.json").write_text(
-        payload + "\n"
-    )
+    if headline:
+        Path(__file__).resolve().parent.joinpath("bench_out.json").write_text(
+            payload + "\n"
+        )
     spark.stop()
     sys.stderr.flush()
     sys.stdout.flush()

@@ -17,27 +17,12 @@ is the global order).
 
 from __future__ import annotations
 
-from collections import deque
-
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from bigdatainfinance1_spark.functions.materialize import materialize
+
 DEFAULT_BUCKETS = 16
-
-# Observability escrow: localCheckpoint truncates lineage, so the UPSTREAM
-# plan — where scan pushdown/pruning is visible — disappears from the final
-# query's explain. Capture the formatted upstream plan at materialization
-# time so plan tests (tests/test_plans.py) can still assert pushdown for
-# queries that pass through these helpers. Bounded; newest last.
-LAST_UPSTREAM_PLANS: deque = deque(maxlen=4)
-
-
-def _checkpoint(df: DataFrame) -> DataFrame:
-    spark = df.sparkSession
-    LAST_UPSTREAM_PLANS.append(
-        spark._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
-    )
-    return df.localCheckpoint(eager=True)
 
 
 def _as_columns(order_cols) -> list[Column]:
@@ -79,12 +64,7 @@ def global_row_number(
     # rows for a 1-in-20 systematic design), the two sides disagree on
     # _pid and ranks shift. One materialization makes both branches read
     # identical bucket assignments regardless of plan reuse decisions.
-    # localCheckpoint, NOT persist: this helper is called by ~18 operator
-    # modules with no unpersist hook, and CacheManager entries outlive the
-    # query (round-4 ADVICE: cached plans accumulated for the whole
-    # session). Checkpointed RDDs are reclaimed by ContextCleaner once the
-    # Python/JVM refs drop — the q_kcore pattern.
-    d = _checkpoint(d.withColumn("_local_rn", F.row_number().over(w)))
+    d = materialize(d.withColumn("_local_rn", F.row_number().over(w)))
     totals = d.groupBy("_pid").agg(F.count(F.lit(1)).alias("_tot"))
     offs = _prefix_offsets(totals, "_tot")
     return (
@@ -110,9 +90,8 @@ def global_running_sum(
         .orderBy(*cols)
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    # localCheckpoint for the same branch-consistency + no-session-leak
-    # reasons as global_row_number
-    d = _checkpoint(d.withColumn("_local_sum", F.sum(value_col).over(w)))
+    # materialize: same branch-consistency reason as global_row_number
+    d = materialize(d.withColumn("_local_sum", F.sum(value_col).over(w)))
     totals = d.groupBy("_pid").agg(F.sum(value_col).alias("_tot"))
     offs = _prefix_offsets(totals, "_tot")
     return (
@@ -155,9 +134,9 @@ def grouped_running_sum(
         .orderBy(*ocols)
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    # localCheckpoint: same branch-consistency + no-session-leak rationale
-    # as global_row_number (both consumers must see one bucket assignment)
-    d = _checkpoint(d.withColumn("_local_sum", F.sum(value_col).over(w)))
+    # materialize: same branch-consistency reason as global_row_number
+    # (both consumers must see one bucket assignment)
+    d = materialize(d.withColumn("_local_sum", F.sum(value_col).over(w)))
     totals = d.groupBy("_pid", *group_cols).agg(F.sum(value_col).alias("_tot"))
     a, b = totals.alias("a"), totals.alias("b")
     cond = F.col("b._pid") < F.col("a._pid")
@@ -207,7 +186,7 @@ def grouped_lag(
     d = _bucketed(df, gcols + ocols, n_buckets)
     w = Window.partitionBy("_pid", *group_cols).orderBy(*ocols)
     # _local_rn shares the window sort with _local_lag (one Window exec)
-    d = _checkpoint(
+    d = materialize(
         d.withColumn("_local_lag", F.lag(value_col).over(w)).withColumn(
             "_local_rn", F.row_number().over(w)
         )
@@ -268,7 +247,7 @@ def grouped_running_max(
         .orderBy(*ocols)
         .rowsBetween(Window.unboundedPreceding, hi)
     )
-    d = _checkpoint(d.withColumn("_local_max", F.max(value_col).over(w)))
+    d = materialize(d.withColumn("_local_max", F.max(value_col).over(w)))
     totals = d.groupBy("_pid", *group_cols).agg(F.max(value_col).alias("_tot"))
     a, b = totals.alias("a"), totals.alias("b")
     cond = F.col("b._pid") < F.col("a._pid")

@@ -26,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from bigdatainfinance1_spark.functions.materialize import materialize
 from bigdatainfinance1_spark.operators.quant_pricing import _norm_cdf_sql
 from bigdatainfinance1_spark.operators.stats_advanced import _norm_cdf_col
 from bigdatainfinance1_spark.operators.ts_mining import _MONTHLY_SQL, _monthly
@@ -588,7 +589,7 @@ def bland_altman(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     p = ym.join(xm, "mi").select(
         "mi", "x", "y", (F.col("x") - F.col("y")).alias("d")
-    ).localCheckpoint()  # O(months); feeds moments AND the outside-LoA count
+    ).transform(materialize)  # O(months); feeds moments AND the outside-LoA count
     mom = p.agg(
         F.count(F.lit(1)).cast("long").alias("n"),
         F.avg("d").alias("bias"),

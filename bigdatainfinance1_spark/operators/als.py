@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from bigdatainfinance1_spark.functions.materialize import materialize
 from bigdatainfinance1_spark.registry import query
 from bigdatainfinance1_spark.sources.catalog import load_table
 
@@ -133,7 +134,7 @@ def als_factorization(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(part), li["l_partkey"] == part["p_partkey"])
         .groupBy(F.col("o_custkey").alias("cust"), F.col("p_brand").alias("brand"))
         .agg(F.sum(F.col("l_quantity").cast("long")).cast("long").alias("r"))
-        .persist()
+        .transform(materialize)
     )
     v = ratings.select("brand").distinct().select(
         "brand",
@@ -175,7 +176,7 @@ def als_factorization(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     u1 = solve("cust", "brand", v)
-    v1 = solve("brand", "cust", u1).persist()
+    v1 = materialize(solve("brand", "cust", u1))
     u2 = solve("cust", "brand", v1)
     pred = (
         ratings.join(u2.withColumnRenamed("f1", "uf1").withColumnRenamed("f2", "uf2"), "cust")
@@ -210,7 +211,7 @@ def als_factorization(spark: SparkSession, sf_dir: str) -> DataFrame:
             6,
         ).alias("train_rmse"),
     )
-    out = (
+    return (
         v1.crossJoin(F.broadcast(rmse))
         .select(
             "brand",
@@ -221,7 +222,3 @@ def als_factorization(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("brand")
     )
-    out = out.localCheckpoint(eager=True)
-    ratings.unpersist()
-    v1.unpersist()
-    return out

@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from bigdatainfinance1_spark.functions.materialize import materialize
 from bigdatainfinance1_spark.registry import query
 from bigdatainfinance1_spark.sources.catalog import load_table
 
@@ -424,7 +425,7 @@ def placebo_did(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("cents"),
             F.count(F.lit(1)).cast("long").alias("n"),
         )
-        .localCheckpoint()  # O(units x 2)
+        .transform(materialize)  # O(units x 2)
     )
     tot = cells.groupBy("period").agg(
         F.sum("cents").cast("long").alias("tc"), F.sum("n").cast("long").alias("tn")

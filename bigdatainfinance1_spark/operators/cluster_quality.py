@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from bigdatainfinance1_spark.functions.materialize import materialize
 from bigdatainfinance1_spark.registry import query
 from bigdatainfinance1_spark.sources.catalog import load_table
 
@@ -442,11 +443,11 @@ def lof_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     q = emb.filter(F.col("vec_id") < LOF_N_QUERIES)
-    knnq = knn(q).localCheckpoint(eager=True)
+    knnq = materialize(knn(q))
     p1 = emb.join(
         knnq.select(F.col("nid").alias("vec_id")).distinct(), "vec_id"
     )
-    knn1 = knn(p1).localCheckpoint(eager=True)
+    knn1 = materialize(knn(p1))
     s = emb.join(
         knn1.select(F.col("nid").alias("vec_id"))
         .union(knn1.select(F.col("pid").alias("vec_id")))
@@ -456,7 +457,7 @@ def lof_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     knns = knn(s)
     kdist = knns.filter(F.col("rn") == LOF_K).select(
         F.col("pid").alias("id"), F.col("d").alias("kd")
-    ).localCheckpoint(eager=True)
+    ).transform(materialize)
 
     def lrd(knn_rel: DataFrame) -> DataFrame:
         return (
@@ -679,7 +680,7 @@ def grid_dbscan(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("cx", "cy", "n")
         .agg(F.sum("xn").cast("long").alias("nbr_n"))
-    ).localCheckpoint()  # O(cells) relation scanned by core/border/noise
+    ).transform(materialize)  # O(cells) relation scanned by core/border/noise
     core = nbhd.filter(F.col("nbr_n") >= DB_MINPTS).select(
         "cx", "cy", "n", ((F.col("cx") + 9) * 100 + (F.col("cy") + 18)).alias("cid")
     )

@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from bigdatainfinance1_spark.functions.materialize import materialize
 from bigdatainfinance1_spark.functions.partitioning import parallelize_scan
 from bigdatainfinance1_spark.registry import query
 from bigdatainfinance1_spark.sources.catalog import load_table
@@ -214,7 +215,7 @@ def jaccard_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
             "(sub-quadratic, may miss <2% of J>=0.8 pairs)",
             stacklevel=2,
         )
-        ds = ds.localCheckpoint(eager=True)
+        ds = materialize(ds)
         candidates = _lsh_candidate_pairs(spark, sf_dir, dh=ds)
         return _verify_jaccard_pairs(
             ds, threshold=0.8, candidates=candidates, checkpoint=False
@@ -265,7 +266,7 @@ def _verify_jaccard_pairs(
     relation also feeds signature generation (round-8 ADVICE: keep this
     list current)."""
     if checkpoint:
-        ds = ds.localCheckpoint(eager=True)
+        ds = materialize(ds)
     sz = ds.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
     if candidates is not None:
         # Candidate-driven intersection: expand candidates by the left doc's
@@ -449,7 +450,7 @@ def _lsh_candidate_pairs(
     #   the verify-side pair explosion, not the signature pass, dominates.
     #   The md5 twin therefore keeps the unmaterialized two-subtree plan.
     if sig_family != "md5":
-        sig = sig.localCheckpoint(eager=True)
+        sig = materialize(sig)
     band_sig = (
         sig.withColumn("band", (F.col("seed") / rows_per_band).cast("int"))
         .groupBy("doc_id", "band")
@@ -490,7 +491,7 @@ def minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     the caveat the oracle match itself checks). Sharing stays BELOW the
     signatures, dodging the fat-hex re-shuffle that measured 480 → 740 s
     at 100× when the sig relation itself was checkpointed."""
-    ds = _doc_shingles(spark, sf_dir).localCheckpoint(eager=True)
+    ds = materialize(_doc_shingles(spark, sf_dir))
     candidates = _lsh_candidate_pairs(spark, sf_dir, sig_family="md5", ds=ds)
     dh = ds.select("doc_id", F.xxhash64("s").alias("h"))
     return _verify_jaccard_pairs(dh, threshold=0.7, candidates=candidates)
@@ -534,7 +535,7 @@ def minhash_lsh_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
     if banding ever dropped a true pair, the hash would go red."""
     # one materialized shingle-hash relation serves BOTH the signature pass
     # and the exact verifier — previously two full explode+distinct passes
-    dh = _doc_shingle_hashes(spark, sf_dir).localCheckpoint(eager=True)
+    dh = materialize(_doc_shingle_hashes(spark, sf_dir))
     candidates = _lsh_candidate_pairs(spark, sf_dir, dh=dh)
     return _verify_jaccard_pairs(dh, threshold=0.7, candidates=candidates, checkpoint=False)
 
@@ -776,10 +777,10 @@ def dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = jaccard_neardup(spark, sf_dir).select("doc_id_1", "doc_id_2")
     edges = pairs.union(
         pairs.select(F.col("doc_id_2").alias("doc_id_1"), F.col("doc_id_1").alias("doc_id_2"))
-    ).persist()
-    labels = (
+    ).transform(materialize)
+    labels = materialize(
         edges.select(F.col("doc_id_1").alias("node")).distinct().withColumn("lbl", F.col("node"))
-    ).persist()
+    )
     changed = -1
     for _ in range(MAX_CC_ITERATIONS):
         neighbor_min = (
@@ -793,19 +794,17 @@ def dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "node",
                 F.least("lbl", F.coalesce("nbr_lbl", "lbl")).alias("lbl"),
             )
-        ).localCheckpoint(eager=True)  # q_kcore lesson: truncate the
-        # deepening label lineage so each round plans at constant cost
+        ).transform(materialize)  # truncate the deepening label lineage so
+        # each round plans at constant cost
         changed = (
             new_labels.alias("n")
             .join(labels.alias("o"), "node")
             .filter(F.col("n.lbl") != F.col("o.lbl"))
             .count()
         )
-        labels.unpersist()
         labels = new_labels
         if changed == 0:
             break
-    edges.unpersist()
     if changed != 0:
         # Non-convergence must fail loudly, not emit partial labels (round-1
         # ADVICE): a component whose min-label distance exceeds the cap would
@@ -1414,7 +1413,7 @@ def lsh_band_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("doc_id", "seed")
         .agg(F.min("hv").alias("minh"))
-        .persist()
+        .transform(materialize)
     )
     # Pass 1 — band every way and compute each banding's exact join
     # fan-out Σ c·(c−1)/2 from bucket sizes (O(docs), no pairs built;
@@ -1488,7 +1487,6 @@ def lsh_band_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         row = (b, r, n_pairs, rnd((1.0 / b) ** (1.0 / r), 4), method)
         out = (out or []) + [row]
-    sig.unpersist()
     return spark.createDataFrame(
         out,
         "n_bands long, rows_per_band long, n_candidate_pairs long,"
@@ -1568,8 +1566,8 @@ def prefix_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("rk") <= F.col("n") - F.ceil(F.lit(PREFIX_JOIN_T) * F.col("n")) + 1)
         .select("doc_id", "h")
         # materialize once: the budget estimate AND both self-join sides
-        # read it (localCheckpoint -> ContextCleaner-reclaimable)
-        .localCheckpoint(eager=True)
+        # read it
+        .transform(materialize)
     )
     est = (
         prefix.groupBy("h")
@@ -1674,22 +1672,23 @@ def entity_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     edges = pairs.select(F.col("na").alias("src"), F.col("nb").alias("dst")).union(
         pairs.select(F.col("nb").alias("src"), F.col("na").alias("dst"))
-    ).persist()
-    labels0 = edges.select(F.col("src").alias("node")).distinct().withColumn(
-        "lbl", F.col("node")
-    ).persist()
-    labels = labels0
+    ).transform(materialize)
+    labels = materialize(
+        edges.select(F.col("src").alias("node")).distinct().withColumn("lbl", F.col("node"))
+    )
     for _ in range(MAX_CC_ITERATIONS):
         neighbor_min = (
             edges.join(labels, edges.dst == labels.node)
             .groupBy("src")
             .agg(F.min("lbl").alias("nbr_lbl"))
         )
-        new_labels = labels.join(
-            neighbor_min, labels.node == neighbor_min.src, "left"
-        ).select("node", F.least("lbl", F.coalesce("nbr_lbl", "lbl")).alias("lbl")).localCheckpoint(eager=True)
-        # eager localCheckpoint, not persist: the q_kcore lesson — the
-        # deepening label lineage is otherwise re-planned every round
+        # materialized: the deepening label lineage is otherwise re-planned
+        # every round
+        new_labels = materialize(
+            labels.join(neighbor_min, labels.node == neighbor_min.src, "left").select(
+                "node", F.least("lbl", F.coalesce("nbr_lbl", "lbl")).alias("lbl")
+            )
+        )
         changed = (
             new_labels.alias("n")
             .join(labels.alias("o"), "node")
@@ -1703,11 +1702,6 @@ def entity_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         raise RuntimeError(
             f"entity_resolution: CC did not converge in {MAX_CC_ITERATIONS} iterations"
         )
-    # the final labels are localCheckpointed (lineage truncated), so the
-    # loop-scoped caches can go now — leaving them cached leaks CacheManager
-    # entries for the rest of the session (round-4 ADVICE)
-    edges.unpersist()
-    labels0.unpersist()
     return (
         labels.groupBy(F.col("lbl").alias("canonical_name"))
         .agg(

@@ -29,6 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from bigdatainfinance1_spark.functions.materialize import materialize
 from bigdatainfinance1_spark.operators.ts_mining import _MONTHLY_SQL, _monthly
 from bigdatainfinance1_spark.registry import query
 from bigdatainfinance1_spark.sources.catalog import load_table
@@ -1605,7 +1606,7 @@ def influence_diagnostics(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # 80-row relation branched 3 ways (count, moments, per-row diag) — one
     # materialization instead of three re-runs of the orders scan
-    resid = resid.localCheckpoint(eager=True)
+    resid = materialize(resid)
     sxx = resid.crossJoin(
         F.broadcast(resid.agg(F.count(F.lit(1)).alias("n")))
     ).agg(

@@ -10,6 +10,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from bigdatainfinance1_spark.functions.materialize import materialize
 from bigdatainfinance1_spark.registry import query
 from bigdatainfinance1_spark.sources.catalog import load_table
 
@@ -449,7 +450,7 @@ def kcenter_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
     with vec_id tie-breaks; pairwise distances round at 8; every greedy
     argmax rides one exact BIGINT key (8-dp distance scaled, vec_id
     tie-break). Both engines walk identical chains — Spark through
-    localCheckpointed {KC_POOL}-row relations, the oracle through
+    materialized {KC_POOL}-row relations, the oracle through
     MATERIALIZED CTEs (each layer re-reads dists j-1 times). Scale: the
     only corpus pass is the hash ranking; everything after is
     O(pool^2)."""
@@ -464,14 +465,14 @@ def kcenter_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb.orderBy(h.asc(), F.col("vec_id").asc())
         .limit(KC_POOL)
         .select("vec_id", "embedding")
-        .localCheckpoint()  # O(pool) rows
+        .transform(materialize)  # O(pool) rows
     )
     a = pool.selectExpr("vec_id AS a", "embedding AS va")
     b = pool.selectExpr("vec_id AS b", "embedding AS vb")
     dists = (
         a.join(b, F.col("a") != F.col("b"))
         .select("a", "b", F.round(1 - cosine_sim("va", "vb"), 8).alias("d"))
-        .localCheckpoint()  # O(pool^2) rows
+        .transform(materialize)  # O(pool^2) rows
     )
     sel = pool.agg(
         F.min_by("vec_id", (F.col("vec_id") * KC_KNUTH + 7) % KC_MOD).alias("p1"),

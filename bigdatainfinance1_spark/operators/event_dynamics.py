@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from bigdatainfinance1_spark.functions.materialize import materialize
 from bigdatainfinance1_spark.registry import query
 from bigdatainfinance1_spark.sources.catalog import load_table
 
@@ -267,7 +268,7 @@ def competing_risks(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.floor((F.unix_micros("te") - F.unix_micros("t0")) / 86400000000),
         )
         .alias("days"),
-    ).localCheckpoint()  # O(users) resolved table feeds all horizons
+    ).transform(materialize)  # O(users) resolved table feeds all horizons
     n = resolved.count()
     h = spark.createDataFrame([(x,) for x in CR_HORIZONS], "horizon long")
     return (
@@ -511,7 +512,7 @@ def rmst(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).otherwise(F.datediff("maxdate", "d1")).alias("t"),
             F.when(F.col("d2").isNotNull(), 1).otherwise(0).alias("ev"),
         )
-    ).localCheckpoint()  # O(customers) durations feed grid AND counts
+    ).transform(materialize)  # O(customers) durations feed grid AND counts
     grid = durations.groupBy("seg", "t").agg(
         F.sum("ev").cast("long").alias("d"), F.count(F.lit(1)).alias("at_t")
     )

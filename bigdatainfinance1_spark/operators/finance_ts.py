@@ -8,6 +8,7 @@ unchanged — git follows the move via --find-copies.
 from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from bigdatainfinance1_spark.functions.materialize import materialize
 from bigdatainfinance1_spark.registry import query
 from bigdatainfinance1_spark.sources.catalog import load_table
 from bigdatainfinance1_spark.operators.retrieval import _CAND_SQL, _candidates
@@ -1484,7 +1485,7 @@ def theta_method(spark: SparkSession, sf_dir: str) -> DataFrame:
     # O(calendar) relation branched 5 ways below (tr/mom/ses/fc/mae) — without
     # materialization every branch re-runs the corpus aggregate (measured
     # 14.1 s at sf0.1; checkpointed: one scan)
-    mm = mm.localCheckpoint(eager=True)
+    mm = materialize(mm)
     mn = mm.agg(F.min("mi").alias("mn"))
     tr = (
         mm.filter(F.col("mi") <= THETA_CUTOFF_MI)

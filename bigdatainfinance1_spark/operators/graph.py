@@ -8,6 +8,7 @@ unchanged — git follows the move via --find-copies.
 from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from bigdatainfinance1_spark.functions.materialize import materialize
 from bigdatainfinance1_spark.registry import query
 from bigdatainfinance1_spark.sources.catalog import load_table
 from bigdatainfinance1_spark.operators.retrieval import _CAND_SQL, _candidates
@@ -66,24 +67,23 @@ def pagerank_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
     a = li.select("l_orderkey", F.col("l_partkey").alias("p1"))
     b = li.select("l_orderkey", F.col("l_partkey").alias("p2"))
-    # pairs is the expensive corpus pass and feeds both persists below
-    # (deg and edges_deg) through the un-materialized flip union — without
-    # this checkpoint the lineitem pair join executes twice (round-5
-    # double-execution audit).
+    # pairs is the expensive corpus pass and feeds both deg and edges_deg
+    # through the un-materialized flip union — without materializing it the
+    # lineitem pair join executes twice (round-5 double-execution audit).
     pairs = (
         a.join(b, "l_orderkey")
         .filter(F.col("p1") < F.col("p2"))
         .select("p1", "p2")
         .distinct()
-        .localCheckpoint(eager=True)
+        .transform(materialize)
     )
     edges = pairs.select(F.col("p1").alias("u"), F.col("p2").alias("v")).unionByName(
         pairs.select(F.col("p2").alias("u"), F.col("p1").alias("v"))
     )
-    deg = edges.groupBy("u").agg(F.count(F.lit(1)).alias("c")).persist()
+    deg = materialize(edges.groupBy("u").agg(F.count(F.lit(1)).alias("c")))
     n = deg.count()  # bounded driver scalar: node count
     ranks = deg.select(F.col("u").alias("node"), (F.lit(1.0) / n).alias("r"))
-    edges_deg = edges.join(deg, "u").persist()
+    edges_deg = materialize(edges.join(deg, "u"))
     for _ in range(iters):
         contrib = (
             edges_deg.join(ranks, edges_deg.u == ranks.node)
@@ -94,7 +94,7 @@ def pagerank_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
         ranks = contrib.select(
             F.col("v").alias("node"), ((1 - d) / n + d * F.col("s")).alias("r")
         )
-    out = (
+    return (
         ranks.join(deg, ranks.node == deg.u)
         .select(
             F.col("node").alias("part_id"),
@@ -104,10 +104,6 @@ def pagerank_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy(F.col("rel_rank").desc(), "part_id")
         .limit(20)
     )
-    out = out.localCheckpoint(eager=True)  # materialize before unpersisting lineage
-    edges_deg.unpersist()
-    deg.unpersist()
-    return out
 
 
 def _degree_orient(edges: DataFrame) -> DataFrame:
@@ -172,7 +168,7 @@ def triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     b = li.select("l_orderkey", F.col("l_partkey").alias("v"))
     # edges feeds the degree census (twice, via the endpoint union), the
     # orientation join, and n_edges — four consumers; oriented feeds the
-    # wedge join twice plus the closing join. Both checkpoints run the
+    # wedge join twice plus the closing join. Both materializations run the
     # pair join / orientation exactly once (round-5 double-execution
     # audit: un-materialized, the lineitem pair join executed 4x).
     edges = (
@@ -182,9 +178,9 @@ def triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("n"))
         .filter(F.col("n") >= 2)
         .select("u", "v")
-        .localCheckpoint(eager=True)
+        .transform(materialize)
     )
-    oriented = _degree_orient(edges).localCheckpoint(eager=True)
+    oriented = materialize(_degree_orient(edges))
     e1 = oriented.select(F.col("src").alias("t_u"), F.col("dst").alias("t_v"))
     e2 = oriented.select(F.col("src").alias("w_u"), F.col("dst").alias("w_v"))
     wedges = e1.join(e2, F.col("t_v") == F.col("w_u"))
@@ -263,7 +259,7 @@ def bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("n") >= 2)
         .select("u", "v")
     )
-    edges = und.unionByName(und.select(F.col("v").alias("u"), F.col("u").alias("v"))).cache()
+    edges = materialize(und.unionByName(und.select(F.col("v").alias("u"), F.col("u").alias("v"))))
     dist = edges.agg(F.min("u").alias("node")).select("node", F.lit(0).alias("dist"))
     for _ in range(4):
         relaxed = (
@@ -275,14 +271,9 @@ def bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("node")
             .agg(F.min("dist").alias("dist"))
         )
-    out = dist.groupBy(F.col("dist").cast("long").alias("dist")).agg(
+    return dist.groupBy(F.col("dist").cast("long").alias("dist")).agg(
         F.count(F.lit(1)).alias("n_nodes")
     )
-    # materialize, then release the loop-scoped edge cache (round-4 ADVICE
-    # leak class: cached plans otherwise persist for the whole session)
-    out = out.localCheckpoint(eager=True)
-    edges.unpersist()
-    return out
 
 
 @query(
@@ -334,7 +325,7 @@ def clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("n"))
         .filter(F.col("n") >= 2)
         .select("u", "v")
-        .cache()
+        .transform(materialize)
     )
     deg = (
         und.select(F.col("u").alias("node"))
@@ -343,8 +334,8 @@ def clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("d"))
     )
     # oriented feeds the wedge join twice plus the closing join; the
-    # checkpoint runs the orientation once over the cached edge set.
-    oriented = _degree_orient(und).localCheckpoint(eager=True)
+    # materialization runs the orientation once over the kept edge set.
+    oriented = materialize(_degree_orient(und))
     e1 = oriented.select(F.col("src").alias("t_u"), F.col("dst").alias("t_v"))
     e2 = oriented.select(F.col("src").alias("w_u"), F.col("dst").alias("w_v"))
     tri = (
@@ -352,7 +343,7 @@ def clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(oriented, (F.col("src") == F.col("t_u")) & (F.col("dst") == F.col("w_v")))
         .agg(F.count(F.lit(1)).alias("n_tri"))
     )
-    out = (
+    return (
         deg.crossJoin(F.broadcast(tri))
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_nodes"),
@@ -364,10 +355,6 @@ def clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("global_cc"),
         )
     )
-    # materialize the 1-row result, then release the edge cache
-    out = out.localCheckpoint(eager=True)
-    und.unpersist()
-    return out
 
 
 # Declarative multi-hop reachability via WITH RECURSIVE (Spark 4 finally
@@ -507,7 +494,7 @@ def adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
     a = li.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("u"))
     b = li.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("v"))
     # und feeds the flip union (→ deg, x, y) and the existing-edge
-    # anti-join — five pair-join executions without this checkpoint
+    # anti-join — five pair-join executions without materializing it
     # (round-5 double-execution audit).
     und = (
         a.join(b, "ok")
@@ -516,7 +503,7 @@ def adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("sup"))
         .filter(F.col("sup") >= 2)
         .select("u", "v")
-        .localCheckpoint(eager=True)
+        .transform(materialize)
     )
     e = und.unionByName(und.select(F.col("v").alias("u"), F.col("u").alias("v")))
     deg = e.groupBy(F.col("u").alias("node")).agg(F.count(F.lit(1)).alias("d"))
@@ -629,9 +616,8 @@ def kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("c") >= 2)
         .select("u", "v")
     )
-    ee = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v"))).persist()
-    nodes0 = ee.select(F.col("u").alias("node")).distinct().persist()
-    nodes = nodes0
+    ee = materialize(e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v"))))
+    nodes = materialize(ee.select(F.col("u").alias("node")).distinct())
     prev_n = nodes.count()
     for _ in range(KCORE_MAX_PEELS):
         kept_edges = (
@@ -643,11 +629,11 @@ def kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.count(F.lit(1)).alias("d"))
             .filter(F.col("d") >= KCORE_K)
             .select(F.col("u").alias("node"))
-            # eager localCheckpoint, not persist: the peel lineage deepens
-            # every round and re-planning the full chain grew round cost
-            # 1.6 s -> 46 s by round 6 at sf0.1 (measured); checkpointing
-            # truncates the plan so every round costs the same
-            .localCheckpoint(eager=True)
+            # the peel lineage deepens every round and re-planning the full
+            # chain grew round cost 1.6 s -> 46 s by round 6 at sf0.1
+            # (measured); materializing truncates the plan so every round
+            # costs the same
+            .transform(materialize)
         )
         n = new_nodes.count()
         nodes = new_nodes
@@ -656,19 +642,12 @@ def kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
         prev_n = n
     else:
         raise RuntimeError(f"kcore: peeling did not converge in {KCORE_MAX_PEELS} rounds")
-    out = (
+    return (
         ee.join(nodes.select(F.col("node").alias("u")), "u")
         .join(nodes.select(F.col("node").alias("v")), "v")
         .groupBy(F.col("u").alias("part_id"))
         .agg(F.count(F.lit(1)).cast("long").alias("core_degree"))
     )
-    # materialize before dropping the loop-scoped caches (the q_pagerank
-    # pattern at the top of this module) — otherwise they leak in
-    # CacheManager for the session (round-4 ADVICE leak class)
-    out = out.localCheckpoint(eager=True)
-    ee.unpersist()
-    nodes0.unpersist()
-    return out
 
 
 # ---------------------------------------------------------------------------
@@ -1022,7 +1001,7 @@ def label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     edges = pairs.select(F.col("p1").alias("u"), F.col("p2").alias("v")).unionByName(
         pairs.select(F.col("p2").alias("u"), F.col("p1").alias("v"))
-    ).persist()
+    ).transform(materialize)
     nodes = edges.select(F.col("u").alias("node")).distinct()
     seeds = (
         nodes.filter(F.col("node") % LP_SEED_MOD == 0)
@@ -1049,7 +1028,7 @@ def label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
             cand.withColumn("rk", F.row_number().over(w))
             .filter(F.col("rk") == 1)
             .select("node", "label")
-            .localCheckpoint(eager=True)
+            .transform(materialize)
         )
         summaries.append(
             pick.join(F.broadcast(truth), "node").agg(
@@ -1070,6 +1049,4 @@ def label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = summaries[0]
     for s in summaries[1:]:
         out = out.unionByName(s)
-    out = out.orderBy("round").localCheckpoint(eager=True)
-    edges.unpersist()
-    return out
+    return out.orderBy("round")

@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from bigdatainfinance1_spark.functions.materialize import materialize
 from bigdatainfinance1_spark.registry import query
 from bigdatainfinance1_spark.sources.catalog import load_table
 
@@ -448,7 +449,7 @@ def meta_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.col("mt") - F.col("mc"), 8).alias("d"),
         F.round(F.col("st") / F.col("nt") + F.col("sc") / F.col("nc"), 8).alias("v"),
     )
-    study = study.localCheckpoint(eager=True)  # 5-row model branched 4 ways
+    study = materialize(study)  # 5-row model branched 4 ways
     # 5-study pooling sums snap each term at a 1e-12 grain (d, v are 8-dp
     # by construction, so every per-study term is an identical double)
     def _snap12(term):

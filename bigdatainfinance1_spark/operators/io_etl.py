@@ -25,6 +25,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from bigdatainfinance1_spark.functions.materialize import materialize
 from bigdatainfinance1_spark.registry import query
 from bigdatainfinance1_spark.sources.catalog import (
     load_table,
@@ -511,11 +512,10 @@ def csv_malformed(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("mode", "PERMISSIVE")
         .option("columnNameOfCorruptRecord", "_corrupt")
         .csv(os.path.join(path, "data.csv"))
-        .cache()
+        .transform(materialize)
     )
     n_good = permissive.filter(F.col("_corrupt").isNull()).count()
     n_corrupt = permissive.filter(F.col("_corrupt").isNotNull()).count()
-    permissive.unpersist()  # both counts taken; don't leak the cache
     # .count() would let the CSV reader prune every column and parse nothing,
     # so DROPMALFORMED would drop nothing (upstream behavior: malformation is
     # only detected for columns actually read). collect() forces full rows.

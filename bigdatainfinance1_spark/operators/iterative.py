@@ -20,6 +20,7 @@ import math
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from bigdatainfinance1_spark.functions.materialize import materialize
 from bigdatainfinance1_spark.registry import query
 from bigdatainfinance1_spark.sources.catalog import load_table
 
@@ -322,11 +323,11 @@ def lloyd_assignments(
     from bigdatainfinance1_spark.functions.partitioning import parallelize_scan
 
     # the per-iteration assignment fold (k x DIM per row, interpreted HOF)
-    # runs in the persisted relation's partitions — spread a few-split scan
-    # across cores before persisting or all 5 passes serialize on one task
-    emb = parallelize_scan(
-        load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    ).persist()
+    # runs in the materialized relation's partitions — spread a few-split
+    # scan across cores first or all 5 passes serialize on one task
+    emb = materialize(
+        parallelize_scan(load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding"))
+    )
     init = (
         emb.orderBy("vec_id")
         .limit(k)
@@ -367,7 +368,6 @@ def lloyd_assignments(
                     "all-null position"
                 )
         cents = [by_id.get(i, cents[i]) for i in range(k)]
-    emb.unpersist()
     return assigned
 
 
@@ -379,7 +379,7 @@ def kmeans_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     init, lowest-id tiebreaks, 12-dp-rounded distances and means), so the
     DuckDB oracle unrolls the identical iterations as chained CTEs and both
     engines converge on bit-identical assignments. The loop itself (and
-    its corpus-persist caching discipline) lives in ``lloyd_assignments``,
+    its corpus materialization) lives in ``lloyd_assignments``,
     shared with q_semdedup."""
     # Emission hardening (round-6 window rule): snap each per-vector
     # distance to an exact 1e-6-grain BIGINT before the mean — sqrt(d2) is

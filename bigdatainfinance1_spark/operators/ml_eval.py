@@ -8,6 +8,7 @@ unchanged — git follows the move via --find-copies.
 from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from bigdatainfinance1_spark.functions.materialize import materialize
 from bigdatainfinance1_spark.registry import query
 from bigdatainfinance1_spark.sources.catalog import load_table
 
@@ -908,7 +909,7 @@ def pass_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = ev.groupBy("user_id").agg(
         F.count(F.lit(1)).alias("n"),
         F.sum(F.when(F.col("event_type") == "purchase", 1).otherwise(0)).alias("c"),
-    ).localCheckpoint(eager=True)
+    ).transform(materialize)
     out = None
     for k in PASS_AT_K:
         prod = F.expr(
@@ -1468,7 +1469,7 @@ def mutual_information(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("r_name").alias("a"), F.col("o_orderpriority").alias("b"))
     )
     jt = obs.groupBy("a", "b").agg(F.count(F.lit(1)).cast("long").alias("nij"))
-    jt = jt.localCheckpoint()  # O(cells); feeds marginals + MI + entropies
+    jt = materialize(jt)  # O(cells); feeds marginals + MI + entropies
     ma = jt.groupBy("a").agg(F.sum("nij").cast("long").alias("ni"))
     mb = jt.groupBy("b").agg(F.sum("nij").cast("long").alias("nj"))
     tot = jt.agg(F.sum("nij").cast("long").alias("n"))

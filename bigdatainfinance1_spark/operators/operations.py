@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from bigdatainfinance1_spark.functions.materialize import materialize
 from bigdatainfinance1_spark.registry import query
 from bigdatainfinance1_spark.sources.catalog import load_table, register_views
 
@@ -670,12 +671,12 @@ def optimal_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
                 6,
             ).alias("c")
         )
-        .localCheckpoint()  # 25-cell cost matrix
+        .transform(materialize)  # 25-cell cost matrix
     )
     w = Window.partitionBy(F.lit(1)).orderBy("rg")
     regions = (
         cost.select("rg").distinct().withColumn("i", F.row_number().over(w))
-    ).localCheckpoint()
+    ).transform(materialize)
     c = cost.join(F.broadcast(regions), "rg").select("i", "g", "c")
     sides = [
         c.filter(F.col("i") == k).selectExpr(f"g AS g{k}", f"c AS c{k}")
@@ -694,7 +695,7 @@ def optimal_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     best = perms.orderBy(
         "total", "g1", "g2", "g3", "g4", "g5"
-    ).limit(1).localCheckpoint()
+    ).limit(1).transform(materialize)
     assigned = F.when(F.col("i") == 1, F.col("g1"))
     for k in range(2, 6):
         assigned = assigned.when(F.col("i") == k, F.col(f"g{k}"))

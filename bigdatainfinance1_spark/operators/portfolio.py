@@ -29,6 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from bigdatainfinance1_spark.functions.materialize import materialize
 from bigdatainfinance1_spark.registry import query
 from bigdatainfinance1_spark.sources.catalog import load_table
 
@@ -787,8 +788,8 @@ def _region_cov_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The consumers branch this 15-row relation 3-5 ways (diagonal, full
     # matrix, LW moments); without collapsing the lineage each branch
     # re-runs the fact aggregate (measured 10.1 s -> 2.8 s for
-    # q_risk_parity at sf0.1). Eager localCheckpoint = one computation.
-    return cp.localCheckpoint(eager=True)
+    # q_risk_parity at sf0.1). Materializing = one computation.
+    return cp.transform(materialize)
 
 
 # ---------------------------------------------------------------------------

@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from bigdatainfinance1_spark.functions.materialize import materialize
 from bigdatainfinance1_spark.registry import query
 from bigdatainfinance1_spark.sources.catalog import load_table
 
@@ -188,7 +189,7 @@ def fellegi_sunter(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("f_source").cast("long").alias("a_source"),
         F.sum("f_length").cast("long").alias("a_length"),
         F.sum("f_first_token").cast("long").alias("a_first_token"),
-    ).localCheckpoint(eager=True)
+    ).transform(materialize)
     rows = []
     for field in ("lang", "source", "length", "first_token"):
         rows.append(

@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from bigdatainfinance1_spark.functions.materialize import materialize
 from bigdatainfinance1_spark.registry import query
 from bigdatainfinance1_spark.sources.catalog import load_table
 
@@ -116,8 +117,8 @@ def recsys_list_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     orders = load_table(spark, sf_dir, "orders")
     # baskets feeds FOUR consumers (scoring left side, the owned-item anti
-    # side, pop, uni) — the q_user_cf_neighbors `informative` pattern: one
-    # eager localCheckpoint materializes the join+distinct once instead of
+    # side, pop, uni) — the q_user_cf_neighbors `informative` pattern:
+    # materializing computes the join+distinct once instead of
     # recomputing it per consumer (measured round 5: 12.7 -> ~8 s at sf0.1).
     baskets = (
         li.join(
@@ -126,15 +127,15 @@ def recsys_list_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select(F.col("o_custkey").alias("u"), F.col("l_partkey").alias("i"))
         .distinct()
-        .localCheckpoint(eager=True)
+        .transform(materialize)
     )
     # ob self-joins under a renamed projection, which defeats ReuseExchange
     # (verified: two lineitem scans / two distinct aggregations in the
-    # un-materialized plan); checkpoint runs the distinct once.
+    # un-materialized plan); materializing runs the distinct once.
     ob = (
         li.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("i"))
         .distinct()
-        .localCheckpoint(eager=True)
+        .transform(materialize)
     )
     cop = (
         ob.selectExpr("ok", "i AS j")
@@ -175,7 +176,7 @@ def recsys_list_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
         scored.withColumn("rn", F.row_number().over(wu))
         .filter(F.col("rn") <= RL_K)
         .select("u", "i")
-        .localCheckpoint(eager=True)
+        .transform(materialize)
     )
     # pop feeds TWO consumers (the ritem join and the catalog census) —
     # checkpointed so the baskets aggregation runs once, not per consumer
@@ -183,7 +184,7 @@ def recsys_list_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     pop = (
         baskets.groupBy("i")
         .agg(F.count(F.lit(1)).cast("long").alias("pop"))
-        .localCheckpoint(eager=True)
+        .transform(materialize)
     )
     uni = baskets.agg(F.count_distinct("u").cast("long").alias("n_users"))
     cat = pop.agg(

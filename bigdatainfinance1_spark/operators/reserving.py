@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from bigdatainfinance1_spark.functions.materialize import materialize
 from bigdatainfinance1_spark.registry import query
 from bigdatainfinance1_spark.sources.catalog import load_table
 
@@ -128,7 +129,7 @@ def chain_ladder(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("long")
             .alias("cents")
         )
-        .localCheckpoint()  # O(origins x ages) cells
+        .transform(materialize)  # O(origins x ages) cells
     )
     origins = paid.select("origin").distinct()
     devs = spark.range(0, CL_MAX_DEV + 1).select(F.col("id").alias("dev"))
@@ -141,7 +142,7 @@ def chain_ladder(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("origin", "dev")
         .agg(F.coalesce(F.sum("cents"), F.lit(0)).cast("long").alias("c"))
     )
-    tri = cum.filter(F.col("dev") <= 12 - F.col("origin")).localCheckpoint()
+    tri = cum.filter(F.col("dev") <= 12 - F.col("origin")).transform(materialize)
     a = tri.selectExpr("origin", "dev", "c AS ca")
     b = tri.selectExpr("origin", "dev - 1 AS dev", "c AS cb")
     # zero-denominator cohort sums become MISSING factors (dropped here,
@@ -309,7 +310,7 @@ def bornhuetter_ferguson(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("long")
             .alias("cents")
         )
-        .localCheckpoint()
+        .transform(materialize)
     )
     prem = (
         orders.filter(F.year("o_orderdate") == CL_YEAR)
@@ -331,7 +332,7 @@ def bornhuetter_ferguson(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("origin", "dev")
         .agg(F.coalesce(F.sum("cents"), F.lit(0)).cast("long").alias("c"))
     )
-    tri = cum.filter(F.col("dev") <= 12 - F.col("origin")).localCheckpoint()
+    tri = cum.filter(F.col("dev") <= 12 - F.col("origin")).transform(materialize)
     a = tri.selectExpr("origin", "dev", "c AS ca")
     b = tri.selectExpr("origin", "dev - 1 AS dev", "c AS cb")
     # zero-denominator cohort sums become MISSING factors (dropped here,

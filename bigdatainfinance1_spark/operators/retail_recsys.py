@@ -8,6 +8,7 @@ unchanged — git follows the move via --find-copies.
 from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from bigdatainfinance1_spark.functions.materialize import materialize
 from bigdatainfinance1_spark.registry import query
 from bigdatainfinance1_spark.sources.catalog import load_table
 from bigdatainfinance1_spark.operators.retrieval import _CAND_SQL, _candidates
@@ -613,23 +614,23 @@ def user_cf_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     pop = purchased.groupBy("part").agg(F.count(F.lit(1)).alias("n_buyers"))
     # informative feeds THREE consumers (sizes + both sides of the pair
-    # join); an eager localCheckpoint materializes it once on the executors
+    # join); materializing it computes it once on the executors
     # and truncates the join+distinct lineage, instead of recomputing the
     # orders⋈lineitem distinct three times (round-3 measurement: 10.4 s →
     # 8.3 s end-to-end at sf0.1). Same pattern a cluster job uses to reuse
     # a filtered interaction matrix across CF stages.
     informative = purchased.join(
         pop.filter(F.col("n_buyers") <= 50).select("part"), "part"
-    ).localCheckpoint(eager=True)
+    ).transform(materialize)
     # sizes is read three times (the broadcast-row-bound count + both
-    # endpoint lookups); one eager checkpoint of the O(customers) relation
+    # endpoint lookups); materializing the O(customers) relation once
     # runs the 550 k-row aggregation once instead of once per broadcast
     # build (round-9: the before-plan showed TWO full HashAggregate
     # subtrees over `informative` feeding the two BroadcastExchanges).
     sizes = (
         informative.groupBy("cust")
         .agg(F.count(F.lit(1)).cast("long").alias("sz"))
-        .localCheckpoint(eager=True)
+        .transform(materialize)
     )
     a = informative.select(F.col("cust").alias("c1"), "part")
     b = informative.select(F.col("cust").alias("c2"), "part")
@@ -646,7 +647,7 @@ def user_cf_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("c1") < F.col("c2"))
         .groupBy("c1", "c2")
         .agg(F.count(F.lit(1)).cast("long").alias("n_common"))
-        .localCheckpoint(eager=True)
+        .transform(materialize)
     )
     # sizes is O(customers) — broadcasting both aliases keeps the pair rows
     # from being exchange-sorted for these lookups, but an unconditional

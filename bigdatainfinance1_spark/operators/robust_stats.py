@@ -10,6 +10,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from bigdatainfinance1_spark.functions.materialize import materialize
 from bigdatainfinance1_spark.registry import query
 from bigdatainfinance1_spark.sources.catalog import load_table
 
@@ -122,7 +123,7 @@ def huber_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("r_name").alias("rg"),
             F.round(F.col("o_totalprice") * 100).cast("long").alias("x"),
         )
-        .localCheckpoint()  # scanned {HUBER_ITERS}+3 times; O(orders) once
+        .transform(materialize)  # scanned {HUBER_ITERS}+3 times; O(orders) once
     )
     med = obs.groupBy("rg").agg(F.round(2 * F.median("x")).cast("long").alias("m2"))
     mad = (

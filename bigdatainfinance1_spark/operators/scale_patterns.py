@@ -27,6 +27,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from bigdatainfinance1_spark.functions.materialize import materialize
 from bigdatainfinance1_spark.registry import query
 from bigdatainfinance1_spark.sources.catalog import load_table
 
@@ -228,7 +229,7 @@ def interval_overlap_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min(F.unix_micros("ts")).cast("long").alias("iv_s"),
             F.max(F.unix_micros("ts")).cast("long").alias("iv_e"),
         )
-        .localCheckpoint(eager=True)
+        .transform(materialize)
     )
     hour_us = 3_600_000_000
     # Join payload is NARROWED to what the predicates/output actually read

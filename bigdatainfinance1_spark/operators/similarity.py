@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from bigdatainfinance1_spark.functions.materialize import materialize
 from bigdatainfinance1_spark.functions.vector import dot, double_matrix_literal, l2_norm
 from bigdatainfinance1_spark.registry import query
 from bigdatainfinance1_spark.sources.catalog import load_table
@@ -592,7 +593,7 @@ def _ivf_with_lists(spark: SparkSession, sf_dir: str, k: int = 16, iters: int = 
         .withColumn("dists", dists)
         .withColumn("nrm", l2_norm("embedding"))
         .drop("cents")
-        .localCheckpoint(eager=True)
+        .transform(materialize)
     )
     return with_lists, nearest_lists
 
@@ -741,9 +742,8 @@ def ann_nprobe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     # materialize ONCE: the k x dim quantizer-distance transform per corpus
     # row (~k*dim flops) would otherwise recompute for the ground-truth
     # pass AND each of the 4 probe joins — 5 passes of the most expensive
-    # narrow map in the query. localCheckpoint (not persist) so the blocks
-    # are ContextCleaner-reclaimable after the sweep returns.
-    ).localCheckpoint(eager=True)
+    # narrow map in the query.
+    ).transform(materialize)
     # materialize the 10-row query panel WITH its per-centroid distance
     # vector: the k x dim centroid literal array otherwise re-enters (and
     # re-codegens in) every sweep branch — at small SF that compile cost,
@@ -753,7 +753,7 @@ def ann_nprobe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("embedding").alias("q_emb"),
         F.col("nrm").alias("q_nrm"),
         "dists",
-    ).localCheckpoint(eager=True)
+    ).transform(materialize)
     q_base = q_panel.select("query_id", "q_emb", "q_nrm")
     cos = dot("q_emb", "embedding") / F.nullif(F.col("q_nrm") * F.col("nrm"), F.lit(0.0))
     w3 = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("neighbor_id"))
@@ -1032,7 +1032,7 @@ def semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     assigned = (
         lloyd_assignments(spark, sf_dir, k=k, n_rows=n)
         .withColumn("nrm", l2_norm("embedding"))
-        .localCheckpoint(eager=True)
+        .transform(materialize)
     )
     a = assigned.select(
         F.col("cid"), F.col("vec_id").alias("v1"), F.col("embedding").alias("e1"),

@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from bigdatainfinance1_spark.functions.materialize import materialize
 from bigdatainfinance1_spark.functions.partitioning import parallelize_scan
 from bigdatainfinance1_spark.registry import query
 from bigdatainfinance1_spark.sources.catalog import load_table
@@ -669,11 +670,9 @@ def bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("cnt"))
         .select(F.split("word", "").alias("syms"), "cnt")
-        .persist()
+        .transform(materialize)
     )
-    out = _bpe_train_words(words, BPE_MERGES)
-    words.unpersist()
-    return out
+    return _bpe_train_words(words, BPE_MERGES)
 
 
 def _bpe_sql_quote(s: str) -> str:
@@ -815,7 +814,7 @@ def bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("cnt"))
         .select("word", F.split("word", "").alias("syms"), "cnt")
-        .persist()
+        .transform(materialize)
     )
     cur = words
     for _k, _bx, _by, _pc, _merged, cur in _bpe_iterate(
@@ -824,7 +823,7 @@ def bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
         pass
     vocab = cur.select("word", F.size("syms").alias("n_sub"))
     toks = docs.select("doc_id", "lang", F.explode(F.split("text", " ")).alias("word"))
-    out = (
+    return (
         toks.join(F.broadcast(vocab), "word")
         .groupBy("lang")
         .agg(
@@ -839,8 +838,6 @@ def bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("chars_per_token"),
         )
     )
-    words.unpersist()
-    return out
 
 
 RAKE_STOPWORDS = ("a", "the")  # the corpus's function words; a real corpus
@@ -1328,10 +1325,10 @@ def winnowing_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     # g (the md5-per-gram relation) feeds TWO consumers (the winnowing
     # window and the stats anti-count join), and sel feeds two more (fp and
     # sel_pos) — without materialization the gram hash pass appears twice in
-    # the physical plan and the window+distinct twice more. Two eager
-    # checkpoints run each expensive pass once (the q_user_cf_neighbors /
+    # the physical plan and the window+distinct twice more. Materializing
+    # both runs each expensive pass once (the q_user_cf_neighbors /
     # _verify_jaccard_pairs pattern); both relations are shuffle-sized.
-    g = g.localCheckpoint(eager=True)
+    g = materialize(g)
     wwin = (
         Window.partitionBy("doc_id").orderBy("pos").rowsBetween(-(WINNOW_W - 1), 0)
     )
@@ -1340,7 +1337,7 @@ def winnowing_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("pos") >= WINNOW_W - 1)
         .select("doc_id", F.col("minkey").alias("key"))
         .distinct()
-        .localCheckpoint(eager=True)
+        .transform(materialize)
     )
     fp = sel.select("doc_id", F.substring("key", 1, 32).alias("h")).distinct()
     df_ok = (

@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from bigdatainfinance1_spark.functions.materialize import materialize
 from bigdatainfinance1_spark.registry import query
 from bigdatainfinance1_spark.sources.catalog import load_table
 
@@ -265,14 +266,14 @@ def textrank(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.least("tok", "tok2").alias("w1"), F.greatest("tok", "tok2").alias("w2")
         )
     )
-    # pairs (vocabulary-sized) feeds both persists below through the
-    # un-materialized flip union; the checkpoint runs the corpus token
+    # pairs (vocabulary-sized) feeds both deg and edges_deg through the
+    # un-materialized flip union; materializing it runs the corpus token
     # pass once instead of twice (round-5 double-execution audit).
     pairs = (
         adj.groupBy("w1", "w2")
         .agg(F.count(F.lit(1)).alias("w"))
         .filter(F.col("w") >= TR_MIN_SUPPORT)
-        .localCheckpoint(eager=True)
+        .transform(materialize)
     )
     edges = pairs.select(
         F.col("w1").alias("u"), F.col("w2").alias("v"), "w"
@@ -280,11 +281,11 @@ def textrank(spark: SparkSession, sf_dir: str) -> DataFrame:
     deg = (
         edges.groupBy("u")
         .agg(F.count(F.lit(1)).alias("c"), F.sum("w").alias("wsum"))
-        .persist()
+        .transform(materialize)
     )
     n = deg.count()  # bounded driver scalar: vocabulary size
     ranks = deg.select(F.col("u").alias("node"), (F.lit(1.0) / n).alias("r"))
-    edges_deg = edges.join(deg, "u").persist()
+    edges_deg = materialize(edges.join(deg, "u"))
     for _ in range(TR_ITERS):
         contrib = (
             edges_deg.join(ranks, edges_deg.u == ranks.node)
@@ -295,7 +296,7 @@ def textrank(spark: SparkSession, sf_dir: str) -> DataFrame:
         ranks = contrib.select(
             F.col("v").alias("node"), ((1 - TR_DAMP) / n + TR_DAMP * F.col("s")).alias("r")
         )
-    out = (
+    return (
         ranks.join(deg, ranks.node == deg.u)
         .select(
             F.col("node").alias("word"),
@@ -305,10 +306,6 @@ def textrank(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy(F.col("rel_rank").desc(), "word")
         .limit(20)
     )
-    out = out.localCheckpoint(eager=True)
-    edges_deg.unpersist()
-    deg.unpersist()
-    return out
 
 
 # ---------------------------------------------------------------------------
@@ -403,7 +400,7 @@ def lsa_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
         a.join(b, F.col("a.doc_id") == F.col("b.doc_id"))
         .groupBy(F.col("a.term").alias("t1"), F.col("b.term").alias("t2"))
         .agg(F.sum(F.col("a.f") * F.col("b.f")).cast("long").alias("w"))
-        .persist()
+        .transform(materialize)
     )
     v = g.select(F.col("t1").alias("term")).distinct().withColumn(
         "v", F.lit(LSA_SCALE).cast("long")
@@ -414,12 +411,12 @@ def lsa_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
         # twice (mx and the renormalized v) and v feeds the next iteration
         # plus three end-of-loop consumers, so a lazy loop re-plans and
         # re-executes an exponentially duplicated mat-vec tree — the
-        # checkpointed-frontier rule every iterative op in this repo follows
+        # materialized-frontier rule every iterative op in this repo follows
         w = (
             g.join(v.withColumnRenamed("term", "t2"), "t2")
             .groupBy(F.col("t1").alias("term"))
             .agg(F.sum(F.col("w") * F.col("v")).cast("long").alias("w"))
-            .localCheckpoint(eager=True)
+            .transform(materialize)
         )
         mx = w.agg(F.max(F.abs(F.col("w"))).cast("long").alias("mx"))
         mx_last = mx
@@ -448,7 +445,7 @@ def lsa_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("t_a", "v_a")
         .agg(F.count(F.lit(1)).cast("long").alias("rnk"))
     )
-    out = (
+    return (
         rnk.crossJoin(F.broadcast(nrm))
         .crossJoin(F.broadcast(lam))
         .select(
@@ -460,9 +457,6 @@ def lsa_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("rnk")
         .limit(LSA_TOP)
     )
-    out = out.localCheckpoint(eager=True)
-    g.unpersist()
-    return out
 
 
 # ---------------------------------------------------------------------------
@@ -791,7 +785,7 @@ def umass_coherence(spark: SparkSession, sf_dir: str) -> DataFrame:
     sdf = (
         raw_toks.groupBy("source", "tok")
         .agg(F.count_distinct("doc_id").cast("long").alias("sd"))
-        .localCheckpoint()  # vocab×sources-sized; feeds df, scored, final
+        .transform(materialize)  # vocab×sources-sized; feeds df, scored, final
     )
     df = sdf.groupBy("tok").agg(F.sum("sd").cast("long").alias("d"))
     ndocs = docs.groupBy("source").agg(F.count(F.lit(1)).cast("long").alias("nd"))
@@ -818,7 +812,7 @@ def umass_coherence(spark: SparkSession, sf_dir: str) -> DataFrame:
         topk.selectExpr("source", "tok AS wi")
         .join(topk.selectExpr("source", "tok AS wj"), "source")
         .filter(F.col("wi") < F.col("wj"))
-    ).localCheckpoint()  # O(sources × k²) rows; reused by 3 consumers
+    ).transform(materialize)  # O(sources × k²) rows; reused by 3 consumers
     # signature-term postings: ONE broadcast-filtered corpus scan (the
     # distinct runs on the tiny filtered set, not the full token stream)
     sig_terms = pairs.selectExpr("wi AS tok").union(
@@ -828,7 +822,7 @@ def umass_coherence(spark: SparkSession, sf_dir: str) -> DataFrame:
         raw_toks.join(F.broadcast(sig_terms), "tok")
         .select("doc_id", "tok")
         .distinct()
-        .localCheckpoint()  # O(sources × k) posting lists
+        .transform(materialize)  # O(sources × k) posting lists
     )
     x = postings.selectExpr("doc_id", "tok AS wi")
     y = postings.selectExpr("doc_id", "tok AS wj")
@@ -1057,14 +1051,14 @@ def learning_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs.select("doc_id", "lang", F.explode(F.split("text", " ")).alias("term"))
         .groupBy("doc_id", "lang", "term")
         .agg(F.count(F.lit(1)).alias("tn"))
-        .localCheckpoint(eager=True)
+        .transform(materialize)
     )
     m = docs.agg(F.max("doc_id").cast("long").alias("m"))
     cuts = (
         spark.createDataFrame([(k,) for k in LC_CUTS], "k long")
         .crossJoin(F.broadcast(m))
         .select("k", F.floor(F.col("m") * F.col("k") / 100).cast("long").alias("cut"))
-        .localCheckpoint()  # 4 rows
+        .transform(materialize)  # 4 rows
     )
     lt = (
         tok.crossJoin(F.broadcast(cuts))

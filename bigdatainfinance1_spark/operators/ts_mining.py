@@ -24,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from bigdatainfinance1_spark.functions.materialize import materialize
 from bigdatainfinance1_spark.registry import query
 from bigdatainfinance1_spark.sources.catalog import load_table
 
@@ -576,7 +577,7 @@ def forecast_combination(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max("m1").alias("m1"),
         F.max("m2").alias("m2"),
         F.max("m3").alias("m3"),
-    ).localCheckpoint(eager=True)
+    ).transform(materialize)
     # ^ comb is ONE row consumed by the four model rows below; without the
     # checkpoint the whole backtest pipeline re-executes per row (round-5
     # double-execution audit).
@@ -1518,7 +1519,7 @@ def haar_wavelet(spark: SparkSession, sf_dir: str) -> DataFrame:
     lv = (
         idx.filter(F.col("i") <= HAAR_N)
         .select(F.col("i").alias("k"), F.col("z").alias("a"))
-        .localCheckpoint()
+        .transform(materialize)
     )
     bands = []
     for level in range(1, HAAR_LEVELS + 1):
@@ -1548,7 +1549,7 @@ def haar_wavelet(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ).alias("energy"),
             )
         )
-        lv = paired.select("k", "a").localCheckpoint()
+        lv = paired.select("k", "a").transform(materialize)
     bands.append(
         lv.agg(
             F.lit("approx").alias("band"),

@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from bigdatainfinance1_spark.functions.materialize import materialize
 from bigdatainfinance1_spark.registry import query
 from bigdatainfinance1_spark.sources.catalog import load_table
 
@@ -711,8 +712,8 @@ def ohlc_multigrain(spark: SparkSession, sf_dir: str) -> DataFrame:
     # week) — without materialization the two event-level window passes
     # re-execute once per grain (round-5 double-execution audit); the
     # checkpoints make the hierarchy genuinely hierarchical.
-    hourly = hourly.localCheckpoint(eager=True)
-    daily = rollup(hourly, "day").localCheckpoint(eager=True)
+    hourly = materialize(hourly)
+    daily = materialize(rollup(hourly, "day"))
     weekly = rollup(daily, "week")
     out = None
     for grain, bars in (("hour", hourly), ("day", daily), ("week", weekly)):

@@ -6,9 +6,9 @@ drift from the files the DuckDB oracle reads.
 
 Scale posture: `spark.read.parquet` gives the vectorized columnar reader with
 predicate pushdown + column pruning for free; at 100 TB the same call reads a
-partitioned directory tree and Catalyst prunes partitions. Small dimensions
-(region/nation/supplier/part/customer) are marked broadcast-preferred so joins
-against the fact tables never shuffle the big side.
+partitioned directory tree and Catalyst prunes partitions. Broadcasting the
+small dimensions (region/nation/supplier/part/customer) is decided at each
+join site with an explicit ``F.broadcast`` hint, not by this catalog.
 """
 
 from __future__ import annotations
@@ -29,10 +29,6 @@ TABLES: tuple[str, ...] = (
     "documents",
     "embeddings",
 )
-
-# Dimensions small enough to broadcast at any realistic scale factor
-# (region 5 rows … part 20k rows at sf0.1 — FIXTURES.md row counts).
-BROADCAST_DIMS: frozenset[str] = frozenset({"region", "nation", "supplier", "part", "customer"})
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

@@ -17,53 +17,57 @@ store (RocksDB in production), never on the driver.
 
 from __future__ import annotations
 
+import hashlib
+import os
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from bigdatainfinance1_spark.functions.materialize import materialize
 from bigdatainfinance1_spark.registry import query
 from bigdatainfinance1_spark.sources.catalog import load_table
+
+
+_STAGE_ROOT = "/tmp/bigdatainfinance1_stream_stage/"
+
+
+def _stage_dir(sf_dir: str, table: str, key: str = "", prefix: str = "") -> str:
+    """Stage directory for `table` keyed by a fingerprint of the SOURCE: the
+    sf_dir path plus size/mtime of the table file — or of every part file of
+    a spark-written directory table — so a regenerated table restages
+    instead of silently reusing stale data. `key` tells stagings of one
+    table apart."""
+    src = os.path.join(sf_dir, f"{table}.parquet")
+    if os.path.isdir(src):
+        files = [(f, os.path.join(root, f)) for root, _, fs in os.walk(src) for f in sorted(fs)]
+    else:
+        files = [(f"{table}.parquet", src)]
+    stats = [(name, os.stat(path)) for name, path in files]
+    parts = [f"{name}:{st.st_size}:{st.st_mtime_ns}" for name, st in stats]
+    fingerprint = "|".join([sf_dir, *([key] if key else []), *parts])
+    return _STAGE_ROOT + prefix + hashlib.md5(fingerprint.encode()).hexdigest()[:12]
+
+
+def _replay(spark: SparkSession, stage: str) -> DataFrame:
+    """readStream over a staged parquet directory; maxFilesPerTrigger=2 over
+    the 4-file stage gives a genuine multi-micro-batch replay."""
+    schema = spark.read.parquet(stage).schema
+    return spark.readStream.schema(schema).option("maxFilesPerTrigger", "2").parquet(stage)
 
 
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """readStream over the events table.
 
     The file stream source needs a directory, and the raw file stores ts as
-    TIMESTAMP(NANOS) — so events are staged once per sf_dir into a multi-file
-    parquet directory (ts already truncated to microseconds by the catalog,
-    identical to DuckDB's read of the original). The 4-file staging +
-    maxFilesPerTrigger=2 gives a genuine multi-micro-batch replay.
-
-    The stage key fingerprints the SOURCE (path + per-file size/mtime), so a
-    regenerated events table restages instead of silently reusing stale data.
+    TIMESTAMP(NANOS) — so events are staged once per source fingerprint
+    into a 4-file parquet directory (ts already truncated to microseconds
+    by the catalog, identical to DuckDB's read of the original).
     """
-    import hashlib
-    import os
-
-    src = os.path.join(sf_dir, "events.parquet")
-    parts = []
-    if os.path.isdir(src):  # spark-written table: a directory of part files
-        for root, _, files in os.walk(src):
-            for f in sorted(files):
-                st = os.stat(os.path.join(root, f))
-                parts.append(f"{f}:{st.st_size}:{st.st_mtime_ns}")
-    else:
-        st = os.stat(src)
-        parts.append(f"events.parquet:{st.st_size}:{st.st_mtime_ns}")
-    fingerprint = sf_dir + "|" + "|".join(parts)
-    stage = (
-        "/tmp/bigdatainfinance1_stream_stage/"
-        + hashlib.md5(fingerprint.encode()).hexdigest()[:12]
-    )
+    stage = _stage_dir(sf_dir, "events")
     if not os.path.exists(os.path.join(stage, "_SUCCESS")):
         load_table(spark, sf_dir, "events").repartition(4).write.mode("overwrite").parquet(stage)
-    schema = spark.read.parquet(stage).schema
-    return (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "2")
-        .parquet(stage)
-    )
+    return _replay(spark, stage)
 
 
 def read_events_stream_ordered(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -87,24 +91,7 @@ def read_events_stream_ordered(spark: SparkSession, sf_dir: str) -> DataFrame:
     every call (idempotent) so stage dirs written before this fix are
     repaired too; the stage fingerprint keys on the SOURCE's mtimes, not
     the stage's, so utime never triggers a restage."""
-    import hashlib
-    import os
-
-    src = os.path.join(sf_dir, "events.parquet")
-    parts = []
-    if os.path.isdir(src):
-        for root, _, files in os.walk(src):
-            for f in sorted(files):
-                st = os.stat(os.path.join(root, f))
-                parts.append(f"{f}:{st.st_size}:{st.st_mtime_ns}")
-    else:
-        st = os.stat(src)
-        parts.append(f"events.parquet:{st.st_size}:{st.st_mtime_ns}")
-    fingerprint = sf_dir + "|ordered|" + "|".join(parts)
-    stage = (
-        "/tmp/bigdatainfinance1_stream_stage/"
-        + hashlib.md5(fingerprint.encode()).hexdigest()[:12]
-    )
+    stage = _stage_dir(sf_dir, "events", key="ordered")
     if not os.path.exists(os.path.join(stage, "_SUCCESS")):
         (
             load_table(spark, sf_dir, "events")
@@ -121,12 +108,7 @@ def read_events_stream_ordered(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = 1_600_000_000  # fixed epoch: deterministic across calls/hosts
     for i, p in enumerate(part_files):
         os.utime(p, (base + i, base + i))
-    schema = spark.read.parquet(stage).schema
-    return (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "2")
-        .parquet(stage)
-    )
+    return _replay(spark, stage)
 
 
 STREAM_STATE_PARTITIONS = "8"
@@ -157,10 +139,10 @@ def run_to_table(result: DataFrame, output_mode: str) -> DataFrame:
         q.awaitTermination()
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    # Copy the sink out (eager localCheckpoint), then DROP the memory-sink
+    # Copy the sink out (materialize), then DROP the memory-sink
     # view — otherwise every invocation pins a full materialized result in
     # driver memory for the session's lifetime (round-1 ADVICE).
-    out = spark.table(name).localCheckpoint(eager=True)
+    out = spark.table(name).transform(materialize)
     spark.catalog.dropTempView(name)
     return out
 
@@ -725,9 +707,7 @@ def stream_file_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     loss and no duplication across micro-batches. Checkpoint + _spark_metadata
     give exactly-once at any scale; partitionBy(event_type) makes the sink
     partition-prunable for downstream readers."""
-    import uuid as _uuid
-
-    base = f"/tmp/bigdatainfinance1_stream_sink/{_uuid.uuid4().hex[:12]}"
+    base = f"/tmp/bigdatainfinance1_stream_sink/{uuid.uuid4().hex[:12]}"
     ev = (
         read_events_stream(spark, sf_dir)
         .filter(F.col("value") > 50)
@@ -774,10 +754,7 @@ def stream_foreach_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     loss and no double-counting across micro-batches. State per key is one
     (count, sum) row — the target table is key-cardinality-sized, never
     event-sized."""
-    import os
-    import uuid as _uuid
-
-    base = f"/tmp/bigdatainfinance1_foreach_upsert/{_uuid.uuid4().hex[:12]}"
+    base = f"/tmp/bigdatainfinance1_foreach_upsert/{uuid.uuid4().hex[:12]}"
     ev = read_events_stream(spark, sf_dir).select("user_id", "value")
 
     def upsert(batch_df: DataFrame, batch_id: int) -> None:
@@ -1135,26 +1112,15 @@ def stream_hll_users(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def read_documents_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """readStream over the documents table — the read_events_stream staging
-    recipe (4-file parquet stage keyed by a source fingerprint,
-    maxFilesPerTrigger=2 for a genuine multi-micro-batch replay), for the
-    document-pipeline streaming operators. No event-time ordering is needed:
-    the consumers are watermark-free (broadcast joins + complete-mode aggs)."""
-    import hashlib
-    import os
-
-    src = os.path.join(sf_dir, "documents.parquet")
-    st = os.stat(src)
-    fingerprint = f"{sf_dir}|documents.parquet:{st.st_size}:{st.st_mtime_ns}"
-    stage = (
-        "/tmp/bigdatainfinance1_stream_stage/docs_"
-        + hashlib.md5(fingerprint.encode()).hexdigest()[:12]
-    )
+    recipe, for the document-pipeline streaming operators. No event-time
+    ordering is needed: the consumers are watermark-free (broadcast joins +
+    complete-mode aggs)."""
+    stage = _stage_dir(sf_dir, "documents", prefix="docs_")
     if not os.path.exists(os.path.join(stage, "_SUCCESS")):
         load_table(spark, sf_dir, "documents").repartition(4).write.mode("overwrite").parquet(
             stage
         )
-    schema = spark.read.parquet(stage).schema
-    return spark.readStream.schema(schema).option("maxFilesPerTrigger", "2").parquet(stage)
+    return _replay(spark, stage)
 
 
 def _rowwise_band_keys():

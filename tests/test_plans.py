@@ -5,8 +5,10 @@ UDFs in hot relational paths."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
+from bigdatainfinance1_spark.functions.materialize import LAST_UPSTREAM_PLANS
 from bigdatainfinance1_spark.registry import load_all_queries
 from bigdatainfinance1_spark.sources.catalog import load_table
 from tests.conftest import SF_DIR
@@ -16,6 +18,13 @@ SPECS = load_all_queries()
 
 def plan_of(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
+
+
+def ranks_upstream_plans() -> list[str]:
+    """The upstream plans the materialize seam escrowed for the ranks
+    helpers — picked by content (their bucket-local `_local_*` columns),
+    since other materializations in the same query escrow too."""
+    return [up for up in LAST_UPSTREAM_PLANS if "_local_" in up]
 
 
 def formatted(df) -> str:
@@ -168,6 +177,27 @@ def test_no_unpartitioned_windows_in_operators():
             if re.search(r"\bWindow\.orderBy\(", line):
                 offenders.append(f"{p}:{i}")
     assert not offenders, f"unpartitioned Window.orderBy in: {offenders}"
+
+
+def test_materialization_only_through_the_seam():
+    """functions/materialize.py is the engine's one materialization seam:
+    no other module may checkpoint, persist, cache or unpersist. The
+    allow-list is empty — a second code path would bring back the
+    CacheManager entries that outlive a query."""
+    import pathlib
+    import re
+
+    root = pathlib.Path("bigdatainfinance1_spark")
+    seam = root / "functions" / "materialize.py"
+    pattern = re.compile(r"\.(localCheckpoint|checkpoint|persist|unpersist)\(|\.cache\(\)")
+    offenders = []
+    for p in sorted(root.rglob("*.py")):
+        if p == seam:
+            continue
+        for i, line in enumerate(p.read_text().splitlines(), 1):
+            if pattern.search(line):
+                offenders.append(f"{p}:{i}")
+    assert not offenders, f"materialization outside functions/materialize.py: {offenders}"
 
 
 def test_global_row_number_is_exact_and_deterministic(spark):
@@ -561,21 +591,19 @@ def test_round4_second_wave_plans(spark):
         assert "CartesianProduct" not in plan, name
         assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan, name
     # q_adamic_adar's wedge/degree/anti joins sit UPSTREAM of
-    # global_row_number's localCheckpoint (lineage truncated in the final
-    # plan), so assert on the upstream plan the ranks helper escrows at
-    # materialization time; the final plan keeps only ranks' bounded
+    # global_row_number's materialization (lineage truncated in the final
+    # plan), so assert on the upstream plan the materialize seam escrows
+    # for the ranks helper; the final plan keeps only ranks' bounded
     # bucket-prefix nested loop (keyed on _pid).
-    from bigdatainfinance1_spark.functions import ranks
-
-    ranks.LAST_UPSTREAM_PLANS.clear()
+    LAST_UPSTREAM_PLANS.clear()
     plan = plan_of(SPECS["q_adamic_adar"].fn(spark, SF_DIR))
     assert "CartesianProduct" not in plan
     for ln in plan.splitlines():
         if "BroadcastNestedLoopJoin" in ln:
             assert "_pid" in ln, ln
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
-    assert ranks.LAST_UPSTREAM_PLANS, "rank helper did not run"
-    up = ranks.LAST_UPSTREAM_PLANS[-1]
+    assert ranks_upstream_plans(), "rank helper did not run"
+    up = ranks_upstream_plans()[-1]
     assert "CartesianProduct" not in up
     assert "BatchEvalPython" not in up and "ArrowEvalPython" not in up
     # the round-5 hub cap must be IN the wedge plan: a semi-join restricts
@@ -584,24 +612,23 @@ def test_round4_second_wave_plans(spark):
 
 
 def test_ranks_upstream_plans_stay_clean(spark):
-    """global_row_number/global_running_sum localCheckpoint (round-5 leak
-    fix) truncates lineage, so the FINAL plan of every ranks-using query
-    no longer shows its pre-rank stage — the other plan tests on those
-    queries silently assert only the post-rank tail. This sweep re-asserts
-    the no-cartesian / no-Python-eval invariants on the ESCROWED upstream
-    plans for one representative ranks consumer per wave."""
-    from bigdatainfinance1_spark.functions import ranks
-
+    """global_row_number/global_running_sum materialize their bucketed
+    relation, which truncates lineage, so the FINAL plan of every
+    ranks-using query no longer shows its pre-rank stage — the other plan
+    tests on those queries silently assert only the post-rank tail. This
+    sweep re-asserts the no-cartesian / no-Python-eval invariants on the
+    ESCROWED upstream plans for one representative ranks consumer per
+    wave."""
     for name in (
         "q_rfm_segmentation",   # windows wave
         "q_lorenz_curve",       # finance wave (global_running_sum)
         "q_sequence_packing",   # pipeline wave (global_running_sum)
         "q_global_shuffle",     # pipeline wave (global_row_number)
     ):
-        ranks.LAST_UPSTREAM_PLANS.clear()
+        LAST_UPSTREAM_PLANS.clear()
         SPECS[name].fn(spark, SF_DIR)
-        assert ranks.LAST_UPSTREAM_PLANS, f"{name}: rank helper did not run"
-        for up in ranks.LAST_UPSTREAM_PLANS:
+        assert ranks_upstream_plans(), f"{name}: rank helper did not run"
+        for up in LAST_UPSTREAM_PLANS:
             assert "CartesianProduct" not in up, name
             assert "BatchEvalPython" not in up and "ArrowEvalPython" not in up, name
 
@@ -785,6 +812,29 @@ def test_round4_mining_and_metrics_wave_plans(spark):
     for name in ("q_deflated_sharpe", "q_degree_assortativity", "q_span_corruption"):
         plan = formatted(SPECS[name].fn(spark, SF_DIR))
         assert "partial_" in plan, name
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "q_pagerank_copurchase",
+        "q_bfs_hops",
+        "q_clustering_coefficient",
+        "q_kcore",
+        "q_label_propagation",
+        "q_als_factorization",
+        "q_textrank",
+        "q_lsa_power_iteration",
+    ],
+)
+def test_iterative_query_final_plan_is_not_a_bare_scan(spark, name):
+    """These queries keep their reused relations through materialize, so
+    they return the lazy final stage instead of a checkpoint of it. A bare
+    `Scan ExistingRDD` final plan would make every plan assertion on them
+    (no cartesian, no Python eval) vacuous — the final plan must still
+    show the closing join or aggregate."""
+    plan = plan_of(SPECS[name].fn(spark, SF_DIR))
+    assert "Join" in plan or "Aggregate" in plan, f"{name}: final plan is\n{plan}"
 
 
 def test_round4_endgame_wave_plans(spark):
@@ -1252,19 +1302,17 @@ def test_panel_dispersion_wave_plans(spark):
 def test_paired_reliability_wave_plans(spark):
     """Wilcoxon SR / Cronbach alpha: pushed-down two-year scan and one
     linear pass respectively; no cartesian, no Python eval. The wilcoxon
-    scan sits UPSTREAM of global_row_number's localCheckpoint (lineage
+    scan sits UPSTREAM of global_row_number's materialization (lineage
     truncated in the final explain), so the pushdown is asserted on the
-    upstream plan the ranks helper escrows at materialization time."""
-    from bigdatainfinance1_spark.functions import ranks
-
+    upstream plan the materialize seam escrows for the ranks helper."""
     for name in ("q_wilcoxon_signed_rank", "q_cronbach_alpha"):
         plan = plan_of(SPECS[name].fn(spark, SF_DIR))
         assert "CartesianProduct" not in plan, name
         assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan, name
-    ranks.LAST_UPSTREAM_PLANS.clear()
+    LAST_UPSTREAM_PLANS.clear()
     SPECS["q_wilcoxon_signed_rank"].fn(spark, SF_DIR)
-    assert ranks.LAST_UPSTREAM_PLANS, "ranks helper did not run"
-    up = ranks.LAST_UPSTREAM_PLANS[-1]
+    assert ranks_upstream_plans(), "ranks helper did not run"
+    up = ranks_upstream_plans()[-1]
     assert "PushedFilters" in up and "o_orderdate" in up
 
 
@@ -1385,7 +1433,7 @@ def test_multi_consumer_relations_materialized_once(spark):
     """Round-5 double-execution audit: relations consumed under DIFFERING
     parent projections (flip unions, renamed self-join sides, metric-row
     fan-outs) defeat ReuseExchange and re-execute per consumer. The fixes
-    eager-localCheckpoint them, so the expensive subtree must be ABSENT
+    materialize them, so the expensive subtree must be ABSENT
     from the final physical plan (it ran once at build time and the plan
     reads the checkpointed RDD instead)."""
     import re

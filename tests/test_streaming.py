@@ -178,6 +178,26 @@ def test_ordered_stage_mtimes_follow_path_order(spark):
         assert earlier["hi"] <= later["lo"], "range partitions out of ts order"
 
 
+def test_stage_dir_fingerprints_directory_part_files(tmp_path):
+    """A directory table (a spark-written stage such as the 10x scale
+    stage) is fingerprinted by its part files: rewriting a part file
+    changes the stage path, although the directory inode's own size and
+    mtime stay put."""
+    import os
+
+    from bigdatainfinance1_spark.streaming.jobs import _stage_dir
+
+    table = tmp_path / "documents.parquet"
+    table.mkdir()
+    part = table / "part-00000.parquet"
+    part.write_bytes(b"a")
+    dir_stat = os.stat(table)
+    before = _stage_dir(str(tmp_path), "documents", prefix="docs_")
+    part.write_bytes(b"bb")
+    os.utime(table, ns=(dir_stat.st_atime_ns, dir_stat.st_mtime_ns))
+    assert _stage_dir(str(tmp_path), "documents", prefix="docs_") != before
+
+
 def test_tws_query_gated_on_protobuf():
     """q_stream_tws_minmax registers iff google.protobuf is importable —
     the Spark 4 transformWithState API needs a protobuf driver worker."""
