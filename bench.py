@@ -22,6 +22,9 @@ a contended reading is machine-visible: trust the median only where the IQR
 is small relative to it; otherwise read the min as the uncontended floor.
 The harness also quiesces (gc + settle) before the first timed pass so a
 preceding oracle sweep's memory pressure is not billed to the first query.
+
+`time_queries` is the one timing loop; scale_check.py calls it once per
+data directory to report the 10x/100x scaling factors by this protocol.
 """
 
 from __future__ import annotations
@@ -29,6 +32,7 @@ from __future__ import annotations
 import gc
 import json
 import os
+import re
 import sys
 import time
 from pathlib import Path
@@ -93,21 +97,31 @@ HEADLINE = [
 ]
 
 
-def materialize(df) -> None:
-    """Force full execution without collecting to the driver."""
-    df.write.format("noop").mode("overwrite").save()
+SETTLE_SEC = 3
 
 
-def main() -> None:
-    names = sys.argv[1:] or HEADLINE
-    headline = names is HEADLINE
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in sf_dir else -1.0
-    spark = get_spark(app_name="bigdatainfinance1_spark-bench")
-    specs = load_all_queries()
+def sf_label(sf_dir: str) -> float:
+    """Scale factor named by a trailing `sf<N>` path component; -1.0 for a
+    directory without one (a replicated stage such as .../sfx10)."""
+    m = re.search(r"sf(\d+(?:\.\d+)?)$", sf_dir.rstrip("/"))
+    return float(m.group(1)) if m else -1.0
+
+
+def quantile(sorted_ts: list[float], q: float) -> float:
+    # linear interpolation (numpy default) over the sorted samples
+    idx = q * (len(sorted_ts) - 1)
+    lo, hi = int(idx), min(int(idx) + 1, len(sorted_ts) - 1)
+    return sorted_ts[lo] + (sorted_ts[hi] - sorted_ts[lo]) * (idx - lo)
+
+
+def time_queries(spark, specs, names: list[str], sf_dir: str) -> dict[str, list[float]]:
+    """Seconds per query for SPARK_GRAFT_BENCH_RUNS interleaved passes over
+    `names` at `sf_dir`. Each query is forced end-to-end with a noop-format
+    write (full materialization on the executors, nothing shipped to
+    Python)."""
     unknown = sorted(set(names) - set(specs))
     if unknown:
-        sys.exit(f"bench.py: unknown queries {unknown}")
+        sys.exit(f"unknown queries {unknown}")
 
     # untimed warmup: JVM + catalog + one tiny action, then quiesce so any
     # preceding process activity (the driver runs bench right after a
@@ -115,14 +129,14 @@ def main() -> None:
     specs["q_pricing_summary"].fn(spark, sf_dir).limit(1).collect()
     gc.collect()
     spark.sparkContext._jvm.System.gc()
-    time.sleep(float(os.environ.get("SPARK_GRAFT_BENCH_SETTLE_SEC", "3")))
+    time.sleep(SETTLE_SEC)
 
     runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "5"))
     samples: dict[str, list[float]] = {name: [] for name in names}
-    for r in range(runs):
+    for _ in range(runs):
         for name in names:
             t0 = time.perf_counter()
-            materialize(specs[name].fn(spark, sf_dir))
+            specs[name].fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
             samples[name].append(round(time.perf_counter() - t0, 3))
             # Untimed inter-query hygiene: drop Python refs so the
             # ContextCleaner reclaims localCheckpoint RDDs and shuffle files
@@ -130,15 +144,22 @@ def main() -> None:
             # actually run the cleanup. Without this, queries that follow
             # heavy checkpointing (q_user_cf_neighbors) measure the
             # predecessor's memory pressure, not their own plan (observed:
-            # q_minhash_lsh 56 s in-suite vs 11 s standalone).
+            # q_minhash_lsh 56 s in-suite vs 11 s standalone). At a 100x
+            # stage the same lag made q_minhash_lsh_fast's broadcast build
+            # fail on storage that was about to be freed.
             gc.collect()
             spark.sparkContext._jvm.System.gc()
+    return samples
 
-    def quantile(sorted_ts: list[float], q: float) -> float:
-        # linear interpolation (numpy default) over the sorted samples
-        idx = q * (len(sorted_ts) - 1)
-        lo, hi = int(idx), min(int(idx) + 1, len(sorted_ts) - 1)
-        return sorted_ts[lo] + (sorted_ts[hi] - sorted_ts[lo]) * (idx - lo)
+
+def main() -> None:
+    names = sys.argv[1:] or HEADLINE
+    headline = names is HEADLINE
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    spark = get_spark(app_name="bigdatainfinance1_spark-bench")
+    specs = load_all_queries()
+    samples = time_queries(spark, specs, names, sf_dir)
+    runs = len(samples[names[0]])
 
     timings: dict[str, float] = {}
     dispersion: dict[str, dict[str, float]] = {}
@@ -169,7 +190,7 @@ def main() -> None:
         "dispersion": dispersion,
         "runs_per_query": runs,
         "aggregation": "median",
-        "sf": sf,
+        "sf": sf_label(sf_dir),
         "n_queries_registered": len(specs),
         "pass_totals": pass_totals,
         "suite_seconds_min_floor": total_min,

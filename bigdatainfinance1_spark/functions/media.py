@@ -16,14 +16,6 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import types as T
 
-# The real decode path is OPT-IN only (env flag), never auto-selected on
-# import success: real_decode has no working body yet, so switching on a
-# merely-importable PIL would turn q_media_features into a crash (round-1
-# ADVICE). Set BIGDATAINFINANCE1_REAL_DECODE=1 once a decoder body exists.
-import os
-
-_USE_REAL_DECODE = os.environ.get("BIGDATAINFINANCE1_REAL_DECODE") == "1"
-
 
 def decode_features_schema() -> T.StructType:
     """Output schema of extract_features (mapInPandas contract)."""
@@ -36,15 +28,6 @@ def decode_features_schema() -> T.StructType:
             T.StructField("feat_grain", T.LongType()),
             T.StructField("feat_dim", T.IntegerType()),
         ]
-    )
-
-
-def real_decode(payload: bytes) -> list[float]:
-    """The production decode path. Not implementable in this container —
-    codecs are absent; see module docstring."""
-    raise NotImplementedError(
-        "image/audio codecs are not installed in this environment; "
-        "use fake_decode (deterministic stand-in) or install codecs"
     )
 
 
@@ -83,12 +66,10 @@ def fake_grain(payload: bytes, dim: int = 8) -> int:
 
 def extract_features(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     """mapInPandas worker: iterate Arrow batches of (doc_id, lang, payload),
-    emit per-row decoded feature stats. Uses fake_decode unless the real
-    path is explicitly opted into (see _USE_REAL_DECODE)."""
-    decode = real_decode if _USE_REAL_DECODE else fake_decode
+    emit per-row decoded feature stats (fake_decode; see module docstring)."""
     for pdf in batches:
         payloads = [bytes(p) for p in pdf["payload"]]
-        feats = [decode(p) for p in payloads]
+        feats = [fake_decode(p) for p in payloads]
         yield pd.DataFrame(
             {
                 "doc_id": pdf["doc_id"].astype("int64"),
@@ -133,8 +114,6 @@ def extract_audio_frames(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFra
     for pdf in batches:
         out: dict[str, list] = {"doc_id": [], "lang": [], "frame_idx": [], "rms": []}
         for doc_id, lang, payload in zip(pdf["doc_id"], pdf["lang"], pdf["payload"]):
-            if _USE_REAL_DECODE:
-                real_decode(bytes(payload))  # pragma: no cover — loud boundary
             samples = np.frombuffer(bytes(payload), dtype=np.uint8).astype(np.int64)
             n_frames = len(samples) // AUDIO_FRAME
             for f in range(n_frames):

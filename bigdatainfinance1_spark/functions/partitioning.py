@@ -61,18 +61,14 @@ def _estimated_scan_splits(df: DataFrame, target: int) -> int:
     return splits
 
 
-def parallelize_scan(df: DataFrame, min_parts: int | None = None) -> DataFrame:
+def parallelize_scan(df: DataFrame) -> DataFrame:
     """Repartition `df` round-robin to the session's default parallelism iff
     its estimated scan split count is lower — a no-op branch at production
     split counts. Row-order effects: round-robin repartition is
     retry-deterministic (sort-before-repartition, SPARK-23207), and every
     caller feeds order-insensitive consumers (per-row hashes, distinct,
     integer-grain aggregates)."""
-    target = (
-        min_parts
-        if min_parts is not None
-        else df.sparkSession.sparkContext.defaultParallelism
-    )
+    target = df.sparkSession.sparkContext.defaultParallelism
     if _estimated_scan_splits(df, target) < target:
         return df.repartition(target)
     return df

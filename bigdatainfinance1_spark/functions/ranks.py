@@ -36,15 +36,23 @@ def _bucketed(df: DataFrame, order_cols: list[Column], n_buckets: int) -> DataFr
     )
 
 
-def _prefix_offsets(totals: DataFrame, total_col: str) -> DataFrame:
-    """(_pid, _off): sum of `total_col` over all buckets strictly before
-    _pid. Triangular self-join on the n_buckets-row relation — never a
-    window, always broadcastable."""
+def _prefix_offsets(totals: DataFrame, group_cols: list[str], combine: Column) -> DataFrame:
+    """(_pid, *group_cols, _off): `combine`, an aggregate over the `b.`-side
+    columns, folded over the rows of every bucket strictly before _pid in
+    the same group. Triangular self-join on the per-(bucket, group)
+    relation of at most n_buckets × |groups| rows — never a window, always
+    broadcastable."""
     a, b = totals.alias("a"), totals.alias("b")
+    cond = F.col("b._pid") < F.col("a._pid")
+    for g in group_cols:
+        cond = cond & (F.col(f"b.{g}") == F.col(f"a.{g}"))
     return (
-        a.join(b, F.col("b._pid") < F.col("a._pid"), "left")
-        .groupBy(F.col("a._pid").alias("_pid"))
-        .agg(F.coalesce(F.sum(f"b.{total_col}"), F.lit(0)).alias("_off"))
+        a.join(b, cond, "left")
+        .groupBy(
+            F.col("a._pid").alias("_pid"),
+            *[F.col(f"a.{g}").alias(g) for g in group_cols],
+        )
+        .agg(combine.alias("_off"))
     )
 
 
@@ -66,7 +74,7 @@ def global_row_number(
     # identical bucket assignments regardless of plan reuse decisions.
     d = materialize(d.withColumn("_local_rn", F.row_number().over(w)))
     totals = d.groupBy("_pid").agg(F.count(F.lit(1)).alias("_tot"))
-    offs = _prefix_offsets(totals, "_tot")
+    offs = _prefix_offsets(totals, [], F.coalesce(F.sum("b._tot"), F.lit(0)))
     return (
         d.join(F.broadcast(offs), "_pid")
         .withColumn(rn_col, (F.col("_off") + F.col("_local_rn")).cast("long"))
@@ -93,7 +101,7 @@ def global_running_sum(
     # materialize: same branch-consistency reason as global_row_number
     d = materialize(d.withColumn("_local_sum", F.sum(value_col).over(w)))
     totals = d.groupBy("_pid").agg(F.sum(value_col).alias("_tot"))
-    offs = _prefix_offsets(totals, "_tot")
+    offs = _prefix_offsets(totals, [], F.coalesce(F.sum("b._tot"), F.lit(0)))
     return (
         d.join(F.broadcast(offs), "_pid")
         .withColumn(out_col, F.col("_off") + F.col("_local_sum"))
@@ -138,18 +146,7 @@ def grouped_running_sum(
     # (both consumers must see one bucket assignment)
     d = materialize(d.withColumn("_local_sum", F.sum(value_col).over(w)))
     totals = d.groupBy("_pid", *group_cols).agg(F.sum(value_col).alias("_tot"))
-    a, b = totals.alias("a"), totals.alias("b")
-    cond = F.col("b._pid") < F.col("a._pid")
-    for g in group_cols:
-        cond = cond & (F.col(f"b.{g}") == F.col(f"a.{g}"))
-    offs = (
-        a.join(b, cond, "left")
-        .groupBy(
-            F.col("a._pid").alias("_pid"),
-            *[F.col(f"a.{g}").alias(g) for g in group_cols],
-        )
-        .agg(F.coalesce(F.sum("b._tot"), F.lit(0)).alias("_off"))
-    )
+    offs = _prefix_offsets(totals, group_cols, F.coalesce(F.sum("b._tot"), F.lit(0)))
     return (
         d.join(F.broadcast(offs), ["_pid", *group_cols])
         .withColumn(out_col, F.col("_off") + F.col("_local_sum"))
@@ -194,29 +191,18 @@ def grouped_lag(
     lasts = d.groupBy("_pid", *group_cols).agg(
         F.max_by(F.struct(F.col(value_col).alias("v")), F.struct(*ocols)).alias("_last")
     )
-    a, b = lasts.alias("a"), lasts.alias("b")
-    cond = F.col("b._pid") < F.col("a._pid")
-    for g in group_cols:
-        cond = cond & (F.col(f"b.{g}") == F.col(f"a.{g}"))
-    offs = (
-        a.join(b, cond, "left")
-        .groupBy(
-            F.col("a._pid").alias("_pid"),
-            *[F.col(f"a.{g}").alias(g) for g in group_cols],
-        )
-        # struct-wrapped so a genuinely-NULL boundary VALUE is carried;
-        # the struct itself is NULL only when no previous bucket exists
-        .agg(F.max_by("b._last", "b._pid").alias("_boundary"))
-    )
+    # struct-wrapped so a genuinely-NULL boundary VALUE is carried; the
+    # struct itself is NULL only when no previous bucket exists
+    offs = _prefix_offsets(lasts, group_cols, F.max_by("b._last", "b._pid"))
     return (
         d.join(F.broadcast(offs), ["_pid", *group_cols])
         .withColumn(
             out_col,
-            F.when(F.col("_local_rn") == 1, F.col("_boundary.v")).otherwise(
+            F.when(F.col("_local_rn") == 1, F.col("_off.v")).otherwise(
                 F.col("_local_lag")
             ),
         )
-        .drop("_pid", "_local_lag", "_local_rn", "_boundary")
+        .drop("_pid", "_local_lag", "_local_rn", "_off")
     )
 
 
@@ -249,18 +235,7 @@ def grouped_running_max(
     )
     d = materialize(d.withColumn("_local_max", F.max(value_col).over(w)))
     totals = d.groupBy("_pid", *group_cols).agg(F.max(value_col).alias("_tot"))
-    a, b = totals.alias("a"), totals.alias("b")
-    cond = F.col("b._pid") < F.col("a._pid")
-    for g in group_cols:
-        cond = cond & (F.col(f"b.{g}") == F.col(f"a.{g}"))
-    offs = (
-        a.join(b, cond, "left")
-        .groupBy(
-            F.col("a._pid").alias("_pid"),
-            *[F.col(f"a.{g}").alias(g) for g in group_cols],
-        )
-        .agg(F.max("b._tot").alias("_off"))
-    )
+    offs = _prefix_offsets(totals, group_cols, F.max("b._tot"))
     return (
         d.join(F.broadcast(offs), ["_pid", *group_cols])
         .withColumn(out_col, F.greatest(F.col("_off"), F.col("_local_max")))

@@ -10,6 +10,9 @@ from __future__ import annotations
 import json
 from pathlib import Path
 
+import pytest
+
+import bench
 from bigdatainfinance1_spark.registry import (
     DRIVER_WINDOW_ORDER,
     ROWS_ONLY_BY_DESIGN,
@@ -129,3 +132,23 @@ def test_rows_only_set_is_exactly_the_declared_four():
 def test_registry_still_contains_everything():
     # Reordering must not drop registrations: full surface stays >= 109.
     assert len(load_all_queries()) >= 109
+
+
+def test_bench_headline_names_are_registered_and_unique():
+    # bench.HEADLINE is also scale_check.py's default query set
+    specs = load_all_queries()
+    assert [n for n in bench.HEADLINE if n not in specs] == []
+    assert len(set(bench.HEADLINE)) == len(bench.HEADLINE)
+
+
+@pytest.mark.parametrize(
+    "sf_dir, sf",
+    [
+        ("/tmp/bigdatainfinance1_sfx10", -1.0),
+        (".perfbench/stage_x10", -1.0),
+        ("testdata/sf0.1/", 0.1),
+    ],
+)
+def test_bench_sf_label(sf_dir, sf):
+    # a replicated stage dir has no numeric sf<N> suffix and must not raise
+    assert bench.sf_label(sf_dir) == sf
